@@ -13,14 +13,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Vectorized columnar readers for the `nats_scan` V2 source.
-  *
-  * The row-materializing `GroupReadSupport` readers ([[NatsScanReader]] /
-  * [[NatsNativeReader]]) build one parquet-example `Group` object graph per
-  * message — correct and pruned, but a multiple-× constant factor over
-  * columnar decode, and at 100 TB the scan IS the workload for
-  * full-stream-shaped queries. These readers decode each already-pruned row
-  * group straight into Spark `ColumnarBatch`es via Spark's own
+/** Vectorized columnar readers for the `nats_scan` V2 source — the one
+  * reader per store layout, with no per-message object graph. Each decodes
+  * an already-pruned row group straight into Spark `ColumnarBatch`es via
+  * Spark's own
   * `VectorizedParquetRecordReader` (the engine the reference's `DataChunk`
   * emission maps to at scale, /root/reference/src/nats_scan.cpp:709-710):
   *
@@ -33,11 +29,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     dispatch.
   *
   * Record-level residue (seq/ts bounds, subject predicates) is NOT applied
-  * here: [[NatsScanBuilder.pushFilters]] keeps every accepted predicate
-  * residual, so Spark re-evaluates it in whole-stage codegen directly over
-  * these batches. Pushdown remains a pure skipping optimization: row-group
-  * pruning at plan time ([[NatsScanScan.planInputPartitions]]) plus parquet
-  * page/column-index skipping via the filter predicate set below.
+  * here. In a batch query [[NatsScanBuilder.pushFilters]] keeps every
+  * accepted predicate residual, so Spark re-evaluates it in whole-stage
+  * codegen directly over these batches; a stream micro-batch reads them
+  * through [[NatsScanReaderFactory.createReader]]'s row view, which drops
+  * the rows outside its seq window. Pushdown remains a pure skipping
+  * optimization: row-group pruning at plan time
+  * ([[NatsScanScan.planInputPartitions]]) plus parquet page/column-index
+  * skipping via the filter predicate set below.
   */
 private[sources] object NatsVectorized {
 
@@ -148,9 +147,10 @@ final class NatsNativeColumnarReader(p: NatsScanPartition,
 
 /** Columnar reader for the FIXTURE layout (`events.parquet`): decodes the
   * raw columns vectorized, then builds the envelope vectors in one compiled
-  * per-batch pass — the columnar analog of [[NatsScanReader]]'s per-row
-  * mapping (seq = event_id+1, ts_nats µs = ts (already µs), subject =
-  * events.<event_type>.<user_id>, payload = props bytes). */
+  * per-batch pass — the same mapping the facade's `ParquetMessageStore`
+  * expresses in DataFrame expressions (seq = event_id+1, ts_nats µs = ts
+  * (already µs), subject = events.<event_type>.<user_id>, payload = props
+  * bytes). */
 final class NatsFixtureColumnarReader(p: NatsScanPartition,
                                       required: StructType, stream: String,
                                       seqLo: Long, seqHi: Long,

@@ -4,15 +4,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Physical scan: one InputPartition per parquet row group, each reader a
   * bounded pull over its byte range (the distributed analog of the
@@ -20,8 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Plan-time pruning: row groups whose event_id / ts statistics fall outside
   * the pushed seq/ts bounds are never planned at all; record-level residue is
-  * re-checked per message in the reader (gap-skip analog :725-729 is a no-op
-  * on columnar storage).
+  * the residual Filter's job in a batch query and the row view's in a stream
+  * micro-batch (gap-skip analog :725-729 is a no-op on columnar storage).
+  * A stream micro-batch is this scan narrowed by [[seqWindow]].
   */
 final class NatsScanScan(file: String, dir: String, stream: String,
                          required: StructType,
@@ -42,7 +40,29 @@ final class NatsScanScan(file: String, dir: String, stream: String,
     asOfEpoch.foreach(_ => throw new UnsupportedOperationException(
       "nats_scan: as_of_epoch is a point-in-time snapshot read; a stream " +
         "tails the LIVE store (bound the replay with seq predicates instead)"))
-    new graft.streaming.NatsMicroBatchStream(dir, stream, maxPerBatch)
+    new graft.streaming.NatsMicroBatchStream(this, maxPerBatch)
+  }
+
+  /** This scan narrowed to the seq window [lo, hi]: a stream micro-batch
+    * (start, end] is the batch scan of [start+1, end]. */
+  def seqWindow(lo: Long, hi: Long): NatsScanScan =
+    new NatsScanScan(file, dir, stream, required, math.max(seqLo, lo),
+      math.min(seqHi, hi), tsLoNs, tsHiNs, subjectContains, subjectPrefixes,
+      maxPerBatch)
+
+  private val nativeDir = new java.io.File(s"$dir/$stream.msgs")
+
+  /** Newest committed seq (0 for an empty store), from footer statistics
+    * over the same committed snapshot the planner reads: the stream's
+    * LastSeq. A native store grows as writers commit, so every call
+    * re-lists it. */
+  def lastSeq: Long = {
+    val (files, native) =
+      if (nativeDir.isDirectory)
+        (StoreEpochs.committedFiles(nativeDir, None).toSeq, true)
+      else (Seq(new java.io.File(file)), false)
+    NatsStatsScan.fromFooters(files, native, Seq(NatsStatsScan.MinSeq(max = true)))
+      .flatMap(_.headOption).collect { case s: Long => s }.getOrElse(0L)
   }
 
   override def toContinuousStream(checkpointLocation: String)
@@ -64,7 +84,6 @@ final class NatsScanScan(file: String, dir: String, stream: String,
   /** planned once, shared by partition planning and [[estimateStatistics]]
     * (both run on the driver; footer reads are metadata-only) */
   private lazy val planned: Array[NatsScanPartition] = {
-    val nativeDir = new java.io.File(s"$dir/$stream.msgs")
     if (nativeDir.isDirectory) {
       // native message store written by NatsScanBatchWrite: prune row groups
       // across part files directly on seq / ts_nats statistics. Only
@@ -193,8 +212,9 @@ private[sources] object StoreEpochs {
   }
 
   /** THE definition of "the committed snapshot": one shared listing +
-    * selection used by both the row-scan planner and the stats pushdown,
-    * so the two can never describe different file sets. */
+    * selection used by the row-scan planner, the stats pushdown and the
+    * micro-batch stream (its LastSeq and, through the planner, its
+    * batches), so none of them can describe a different file set. */
   def committedFiles(nativeDir: java.io.File,
                      asOf: Option[Long]): Array[java.io.File] = {
     val committed = Option(nativeDir.listFiles(
@@ -251,36 +271,27 @@ final class NatsScanReaderFactory(required: StructType, seqLo: Long,
                                   pushedLimit: Option[Int] = None,
                                   assertSeqOrder: Boolean = false)
     extends PartitionReaderFactory {
-  def this(required: StructType, seqLo: Long, seqHi: Long, tsLoNs: Long,
-           tsHiNs: Long, subjectContains: List[String], stream: String) =
-    this(required, seqLo, seqHi, tsLoNs, tsHiNs, subjectContains, Nil, stream)
 
   /** seq ordinal in the output when the top-n monotonicity assertion is on
     * (-1 = off). A top-n on seq always projects seq, but stay defensive. */
   private val seqCheckIdx: Int =
     if (assertSeqOrder) required.fieldNames.indexOf("seq") else -1
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[NatsScanPartition]
-    val inner =
-      if (part.native)
-        new NatsNativeReader(part, required, seqLo, seqHi, tsLoNs, tsHiNs,
-          subjectContains, subjectPrefixes, stream)
-      else
-        new NatsScanReader(part, required, seqLo, seqHi, tsLoNs, tsHiNs,
-          subjectContains, subjectPrefixes, stream)
-    pushedLimit.fold(inner: PartitionReader[InternalRow])(
-      new LimitedRowReader(inner, _, seqCheckIdx))
-  }
+  /** Row view for the micro-batch stream, the only row-mode caller (batch
+    * scans read columnar, below). Spark puts no residual Filter above a
+    * stream source, so the view itself drops the rows outside this
+    * factory's seq/ts bounds, which the columnar decoders only prune by. */
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new BoundedRowView(createColumnarReader(p), required, seqLo, seqHi,
+      TsBounds.loUs(tsLoNs), TsBounds.hiUs(tsHiNs))
 
   /** Batch scans decode vectorized (see [[NatsVectorized]]); subject/seq/ts
     * residue is Spark's job (the builder keeps every pushed predicate
-    * residual). The row readers above remain the streaming path, which
-    * constructs them directly and relies on their record-level filters. */
+    * residual). */
   override def supportColumnarReads(p: InputPartition): Boolean = true
 
   override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+      : PartitionReader[ColumnarBatch] = {
     val part = p.asInstanceOf[NatsScanPartition]
     val inner =
       if (part.native)
@@ -289,58 +300,68 @@ final class NatsScanReaderFactory(required: StructType, seqLo: Long,
       else
         new NatsFixtureColumnarReader(part, required, stream, seqLo, seqHi,
           tsLoNs, tsHiNs)
-    pushedLimit.fold(
-      inner: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch])(
+    pushedLimit.fold(inner: PartitionReader[ColumnarBatch])(
       new LimitedColumnarReader(inner, _, seqCheckIdx))
   }
 }
 
-/** Early-stop decorators for a PARTIALLY pushed LIMIT: the source may emit
+/** The rows of a columnar reader that fall inside [seqLo, seqHi] and
+  * [tsLoUs, tsHiUs]. A bounded axis must be projected; a null on a bounded
+  * axis is outside it. */
+private final class BoundedRowView(batches: PartitionReader[ColumnarBatch],
+                                   required: StructType, seqLo: Long,
+                                   seqHi: Long, tsLoUs: Long, tsHiUs: Long)
+    extends PartitionReader[InternalRow] {
+  private val seqIdx = if (seqLo > 1L || seqHi < Long.MaxValue)
+    required.fieldNames.indexOf("seq") else -1
+  private val tsIdx = if (tsLoUs > Long.MinValue || tsHiUs < Long.MaxValue)
+    required.fieldNames.indexOf("ts_nats") else -1
+  require((seqIdx >= 0 || seqLo <= 1L && seqHi == Long.MaxValue) &&
+    (tsIdx >= 0 || tsLoUs == Long.MinValue && tsHiUs == Long.MaxValue),
+    "nats_scan: a bounded row read must project its bounded columns")
+
+  private var rows: java.util.Iterator[InternalRow] =
+    java.util.Collections.emptyIterator()
+  private var current: InternalRow = _
+
+  private def within(r: InternalRow, idx: Int, lo: Long, hi: Long): Boolean =
+    idx < 0 || !r.isNullAt(idx) && { val v = r.getLong(idx); v >= lo && v <= hi }
+
+  override def next(): Boolean = {
+    while (true) {
+      while (rows.hasNext) {
+        val r = rows.next()
+        if (within(r, seqIdx, seqLo, seqHi) && within(r, tsIdx, tsLoUs, tsHiUs)) {
+          current = r
+          return true
+        }
+      }
+      if (!batches.next()) return false
+      rows = batches.get().rowIterator()
+    }
+    false
+  }
+
+  override def get(): InternalRow = current
+  override def close(): Unit = batches.close()
+}
+
+/** Early-stop decorator for a PARTIALLY pushed LIMIT: the source may emit
   * at most ~limit rows per partition and Spark's own Local/GlobalLimit
   * above the scan enforces the exact count — so stopping is purely an I/O
-  * and decode saving, never a correctness lever. The columnar variant stops
-  * at the first batch boundary at-or-after the limit (truncating mid-batch
-  * would buy nothing: the batch is already decoded).
+  * and decode saving, never a correctness lever. It stops at the first
+  * batch boundary at-or-after the limit (truncating mid-batch would buy
+  * nothing: the batch is already decoded).
   *
   * `seqIdx >= 0` arms the TOP-N monotonicity assertion: when the limit hint
   * came from pushTopN, "first rows = lowest seqs" is a correctness
   * precondition (the early stop drops later rows for good), so each emitted
   * partition must ascend by seq — a violation (store layout contract broken
   * out-of-band) fails the task loudly instead of returning a wrong head. */
-private object SeqOrderCheck {
-  def fail(seq: Long, prev: Long): Nothing =
-    throw new IllegalStateException(
-      s"nats_scan top-n: part file violates the seq-ascending store layout " +
-        s"(seq $seq after $prev); the store was modified outside the " +
-        s"sorted write path — drop its ${StoreLayout.MarkerName} marker or " +
-        s"recompact")
-}
-
-private final class LimitedRowReader(inner: PartitionReader[InternalRow],
-                                     limit: Int, seqIdx: Int = -1)
-    extends PartitionReader[InternalRow] {
-  private var emitted = 0
-  private var prevSeq = Long.MinValue
-  override def next(): Boolean =
-    emitted < limit && inner.next() && {
-      if (seqIdx >= 0) {
-        val r = inner.get()
-        if (!r.isNullAt(seqIdx)) {
-          val s = r.getLong(seqIdx)
-          if (s < prevSeq) SeqOrderCheck.fail(s, prevSeq)
-          prevSeq = s
-        }
-      }
-      emitted += 1; true
-    }
-  override def get(): InternalRow = inner.get()
-  override def close(): Unit = inner.close()
-}
-
 private final class LimitedColumnarReader(
-    inner: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch],
+    inner: PartitionReader[ColumnarBatch],
     limit: Int, seqIdx: Int = -1)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+    extends PartitionReader[ColumnarBatch] {
   private var emitted = 0L
   private var prevSeq = Long.MinValue
   override def next(): Boolean =
@@ -352,7 +373,11 @@ private final class LimitedColumnarReader(
         while (i < b.numRows()) {
           if (!col.isNullAt(i)) {
             val s = col.getLong(i)
-            if (s < prevSeq) SeqOrderCheck.fail(s, prevSeq)
+            if (s < prevSeq) throw new IllegalStateException(
+              s"nats_scan top-n: part file violates the seq-ascending store " +
+                s"layout (seq $s after $prevSeq); the store was modified " +
+                s"outside the sorted write path — drop its " +
+                s"${StoreLayout.MarkerName} marker or recompact")
             prevSeq = s
           }
           i += 1
@@ -360,199 +385,6 @@ private final class LimitedColumnarReader(
       }
       emitted += b.numRows(); true
     }
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
-    inner.get()
+  override def get(): ColumnarBatch = inner.get()
   override def close(): Unit = inner.close()
-}
-
-/** Reader for the native message store (part files written by
-  * [[NatsScanBatchWrite]]): envelope columns read verbatim, record filters
-  * applied directly on seq / ts_nats (µs). */
-final class NatsNativeReader(p: NatsScanPartition, required: StructType,
-                             seqLo: Long, seqHi: Long, tsLoNs: Long,
-                             tsHiNs: Long, subjectContains: List[String],
-                             subjectPrefixes: List[String], stream: String)
-    extends PartitionReader[InternalRow] {
-
-  private val needed: Set[String] = required.fieldNames.toSet
-
-  private val tsLoUs =
-    if (tsLoNs == Long.MinValue) Long.MinValue else Math.floorDiv(tsLoNs + 999L, 1000L)
-  private val tsHiUs =
-    if (tsHiNs == Long.MaxValue) Long.MaxValue else Math.floorDiv(tsHiNs, 1000L)
-
-  private val parquetCols: Seq[String] = {
-    val cols = Seq("subject", "seq", "ts_nats", "payload").filter(needed.contains)
-    val extra =
-      (if (seqLo > 1L || seqHi < Long.MaxValue) Seq("seq") else Nil) ++
-      (if (tsLoUs > Long.MinValue || tsHiUs < Long.MaxValue) Seq("ts_nats") else Nil) ++
-      (if (subjectContains.nonEmpty) Seq("subject") else Nil)
-    (cols ++ extra).distinct
-  }
-
-  private val reader: ParquetReader[org.apache.parquet.example.data.Group] = {
-    val conf = new Configuration()
-    if (parquetCols.nonEmpty) {
-      val fields = parquetCols.map {
-        case "subject" => "optional binary subject (STRING);"
-        case "seq" => "optional int64 seq;"
-        case "ts_nats" => "optional int64 ts_nats (TIMESTAMP(MICROS,true));"
-        case "payload" => "optional binary payload;"
-      }.mkString("\n")
-      conf.set("parquet.read.schema", s"message nats_envelope {\n$fields\n}")
-    }
-    var pred: org.apache.parquet.filter2.predicate.FilterPredicate = null
-    def and(p2: org.apache.parquet.filter2.predicate.FilterPredicate): Unit =
-      pred = if (pred == null) p2 else FilterApi.and(pred, p2)
-    val sc = FilterApi.longColumn("seq")
-    val tc = FilterApi.longColumn("ts_nats")
-    if (seqLo > 1L) and(FilterApi.gtEq(sc, java.lang.Long.valueOf(seqLo)))
-    if (seqHi < Long.MaxValue) and(FilterApi.ltEq(sc, java.lang.Long.valueOf(seqHi)))
-    if (tsLoUs > Long.MinValue) and(FilterApi.gtEq(tc, java.lang.Long.valueOf(tsLoUs)))
-    if (tsHiUs < Long.MaxValue) and(FilterApi.ltEq(tc, java.lang.Long.valueOf(tsHiUs)))
-    var b = ParquetReader
-      .builder(new GroupReadSupport(), new Path(p.file))
-      .withConf(conf)
-      .withFileRange(p.rangeStart, p.rangeEnd)
-    if (pred != null) b = b.withFilter(FilterCompat.get(pred))
-    b.build()
-  }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (true) {
-      val g = reader.read()
-      if (g == null) return false
-      val row = toRow(g)
-      if (row != null) { current = row; return true }
-    }
-    false
-  }
-
-  private def toRow(g: org.apache.parquet.example.data.Group): InternalRow = {
-    def has(c: String): Boolean = g.getType.containsField(c) &&
-      g.getFieldRepetitionCount(c) > 0
-    lazy val subject: String = if (has("subject")) g.getString("subject", 0) else null
-    if ((subjectContains.nonEmpty || subjectPrefixes.nonEmpty) &&
-        (subject == null || !subjectContains.forall(subject.contains(_)) ||
-          !subjectPrefixes.forall(subject.startsWith(_))))
-      return null
-    val vals = required.fieldNames.map {
-      case "stream" => UTF8String.fromString(stream)
-      case "subject" => if (subject == null) null else UTF8String.fromString(subject)
-      case "seq" => if (has("seq")) g.getLong("seq", 0) else null
-      case "ts_nats" => if (has("ts_nats")) g.getLong("ts_nats", 0) else null
-      case "payload" => if (has("payload")) g.getBinary("payload", 0).getBytes else null
-      case other => sys.error(s"unknown envelope column $other")
-    }
-    InternalRow.fromSeq(vals.toIndexedSeq)
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
-}
-
-/** Per-partition reader: parquet Group API over the partition's byte range,
-  * with record-level seq/ts filters delegated to parquet (page skipping) and
-  * only the parquet columns backing the required envelope columns read. */
-final class NatsScanReader(p: NatsScanPartition, required: StructType,
-                           seqLo: Long, seqHi: Long, tsLoNs: Long,
-                           tsHiNs: Long, subjectContains: List[String],
-                           subjectPrefixes: List[String], stream: String)
-    extends PartitionReader[InternalRow] {
-
-  private val needed: Set[String] = required.fieldNames.toSet
-  private val parquetCols: Seq[String] = {
-    val m = Seq(
-      "subject" -> Seq("event_type", "user_id"),
-      "seq" -> Seq("event_id"),
-      "ts_nats" -> Seq("ts"),
-      "payload" -> Seq("props"))
-    val cols = m.collect { case (env, pc) if needed.contains(env) => pc }.flatten
-    // always keep event_id/ts when a bound is pushed, for the record filter
-    val extra =
-      (if (seqLo > 1L || seqHi < Long.MaxValue) Seq("event_id") else Nil) ++
-      (if (tsLoNs > Long.MinValue || tsHiNs < Long.MaxValue) Seq("ts") else Nil)
-    (cols ++ extra).distinct
-  }
-
-  private val reader: ParquetReader[org.apache.parquet.example.data.Group] = {
-    val conf = new Configuration()
-    val projection =
-      if (parquetCols.isEmpty) None
-      else Some {
-        val fields = parquetCols.map {
-          case "event_id" => "optional int64 event_id;"
-          case "ts" => "optional int64 ts (TIMESTAMP(MICROS,false));"
-          case "user_id" => "optional int64 user_id;"
-          case "event_type" => "optional binary event_type (STRING);"
-          case "props" => "optional binary props (STRING);"
-        }.mkString("\n")
-        s"message spark_schema {\n$fields\n}"
-      }
-    projection.foreach(s => conf.set("parquet.read.schema", s))
-
-    var pred: org.apache.parquet.filter2.predicate.FilterPredicate = null
-    def and(p2: org.apache.parquet.filter2.predicate.FilterPredicate): Unit =
-      pred = if (pred == null) p2 else FilterApi.and(pred, p2)
-    val idc = FilterApi.longColumn("event_id")
-    // fixture ts is int64 µs (TIMESTAMP(MICROS)); the ns bounds convert
-    // exactly: ts_ns = µs·1000 ∈ [lo, hi] ⟺ µs ∈ [⌈lo/1000⌉, ⌊hi/1000⌋]
-    val tsc = FilterApi.longColumn("ts")
-    if (seqLo > 1L) and(FilterApi.gtEq(idc, java.lang.Long.valueOf(seqLo - 1)))
-    if (seqHi < Long.MaxValue) and(FilterApi.ltEq(idc, java.lang.Long.valueOf(seqHi - 1)))
-    if (tsLoNs > Long.MinValue)
-      and(FilterApi.gtEq(tsc, java.lang.Long.valueOf(TsBounds.loUs(tsLoNs))))
-    if (tsHiNs < Long.MaxValue)
-      and(FilterApi.ltEq(tsc, java.lang.Long.valueOf(TsBounds.hiUs(tsHiNs))))
-
-    var b = ParquetReader
-      .builder(new GroupReadSupport(), new Path(p.file))
-      .withConf(conf)
-      .withFileRange(p.rangeStart, p.rangeEnd)
-    if (pred != null) b = b.withFilter(FilterCompat.get(pred))
-    b.build()
-  }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (true) {
-      val g = reader.read()
-      if (g == null) return false
-      val row = toRow(g)
-      if (row != null) { current = row; return true }
-    }
-    false
-  }
-
-  private def toRow(g: org.apache.parquet.example.data.Group): InternalRow = {
-    def has(c: String): Boolean = g.getType.containsField(c) &&
-      g.getFieldRepetitionCount(c) > 0
-    // subject substring filter (reference semantics: substring, not wildcard,
-    // /root/reference/src/nats_scan.cpp:741-746)
-    lazy val subject: String =
-      if (has("event_type") && has("user_id"))
-        s"events.${g.getString("event_type", 0)}.${g.getLong("user_id", 0)}"
-      else null
-    if ((subjectContains.nonEmpty || subjectPrefixes.nonEmpty) &&
-        (subject == null || !subjectContains.forall(subject.contains(_)) ||
-          !subjectPrefixes.forall(subject.startsWith(_))))
-      return null
-    val vals = required.fieldNames.map {
-      case "stream" => UTF8String.fromString(stream)
-      case "subject" => if (subject == null) null else UTF8String.fromString(subject)
-      case "seq" => if (has("event_id")) g.getLong("event_id", 0) + 1L else null
-      case "ts_nats" =>
-        if (has("ts")) g.getLong("ts", 0) else null // already µs
-      case "payload" =>
-        if (has("props")) g.getString("props", 0).getBytes("UTF-8") else null
-      case other => sys.error(s"unknown envelope column $other")
-    }
-    InternalRow.fromSeq(vals.toIndexedSeq)
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }

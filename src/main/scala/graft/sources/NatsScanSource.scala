@@ -95,6 +95,11 @@ final class NatsScanTable(rawProps: Map[String, String])
 
   private val maxPerBatch =
     props.getOrElse("max_msgs_per_batch", "1000").toLong
+  locally {
+    // 0 would never advance a stream, a negative cap would move it back
+    if (maxPerBatch < 1) sys.error(
+      s"nats_scan: max_msgs_per_batch must be >= 1, got $maxPerBatch")
+  }
 
   /** credential options (user_creds / nkey_seed / tls): parsed and validated
     * at bind; only meaningful for the transport mode */

@@ -1,15 +1,8 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types.StructType
-import graft.sources.{NatsScanPartition, NatsScanReaderFactory, NatsScanSource}
+import org.apache.spark.sql.connector.read.streaming.Offset
+import graft.sources.NatsScanScan
 
 /** Seq-based micro-batch stream over the message store — the superset the
   * reference only roadmaps ("live tail", /root/reference/docs/GUIDE.md:479-482;
@@ -17,118 +10,54 @@ import graft.sources.{NatsScanPartition, NatsScanReaderFactory, NatsScanSource}
   * checkpoint/recovery semantics are exactly "resume after seq N" — what a
   * durable consumer would give a live NATS deployment.
   *
-  * Each micro-batch serves the seq range (lastOffset, thisOffset] through the
-  * same partition readers as the batch source; `max_msgs_per_batch` caps
-  * batch size (backpressure knob, like JetStream pull-consumer batch sizes).
+  * Each micro-batch (lastOffset, thisOffset] is a replay of the batch scan
+  * over that seq window ([[NatsScanScan.seqWindow]]): the same committed
+  * files, row-group pruning and partition readers as the batch source;
+  * `max_msgs_per_batch` caps batch size (backpressure knob, like
+  * JetStream pull-consumer batch sizes).
   */
-final class NatsMicroBatchStream(dir: String, stream: String,
-                                 maxPerBatch: Long)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+final class NatsMicroBatchStream(scan: NatsScanScan,
+                                 protected val maxPerBatch: Long)
+    extends SeqOffsetStream {
 
-  private val file = s"$dir/$stream.parquet"
-  private val nativeDir = new java.io.File(s"$dir/$stream.msgs")
-
-  /** committed part files of the native store (staged/aborted skipped) */
-  private def nativeFiles: Seq[String] =
-    if (!nativeDir.isDirectory) Nil
-    else nativeDir.listFiles((f: java.io.File) => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(_.getPath).sorted.toSeq
-
-  /** [min, max] of a stats column across one file's row groups */
-  private def statsBounds(path: String, column: String,
-                          adj: Long): Option[(Long, Long)] = {
-    val in = HadoopInputFile.fromPath(new Path(path), new Configuration())
-    val r = ParquetFileReader.open(in)
-    try {
-      val bs = r.getRowGroups.asScala.flatMap { rg =>
-        rg.getColumns.asScala.find(_.getPath.toDotString == column)
-          .flatMap { c =>
-            val st = c.getStatistics
-            if (st == null || !st.hasNonNullValue) None
-            else Some((
-              st.genericGetMin.asInstanceOf[java.lang.Long].longValue() + adj,
-              st.genericGetMax.asInstanceOf[java.lang.Long].longValue() + adj))
-          }
-      }
-      if (bs.isEmpty) None else Some((bs.map(_._1).min, bs.map(_._2).max))
-    } finally r.close()
-  }
-
-  /** Latest available sequence. The fixture file is static (computed once);
-    * a native store grows as writers append/commit, so it is re-listed on
-    * every offset poll — exactly how a live-tail source discovers new
-    * messages (docs/LIVE_NATS.md: stream LastSeq). */
-  private def maxSeq: Long =
-    if (nativeDir.isDirectory)
-      nativeFiles.flatMap(statsBounds(_, "seq", 0L)).map(_._2)
-        .maxOption.getOrElse(0L)
-    else fixtureMaxSeq
-
-  private lazy val fixtureMaxSeq: Long =
-    statsBounds(file, "event_id", 1L).map(_._2).getOrElse(0L)
+  protected def lastSeq: Long = scan.lastSeq
 
   override def initialOffset(): Offset = SeqOffset(0L)
-
-  override def latestOffset(): Offset = SeqOffset(maxSeq)
-
-  // admission control: each micro-batch admits at most maxPerBatch messages
-  // (the pull-consumer batch-size analog)
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
-    SeqOffset(nextOffset(start.asInstanceOf[SeqOffset].seq))
-
-  override def reportLatestOffset(): Offset = SeqOffset(maxSeq)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  // Trigger.AvailableNow: drain up to the offset captured at query start,
-  // still in maxPerBatch-sized micro-batches
-  override def prepareForTriggerAvailableNow(): Unit = { val _ = maxSeq }
-
-  override def deserializeOffset(json: String): Offset =
-    SeqOffset(json.trim.toLong)
 
   override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = ()
 
+  /** Spark plans one batch several times while it prepares the physical
+    * plan, and each plan reads footers: keep the last window's plan. */
+  private var lastPlan: (Long, Long, Array[InputPartition]) =
+    (1L, 0L, Array.empty)
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[SeqOffset].seq + 1
     val hi = end.asInstanceOf[SeqOffset].seq
     if (hi < lo) Array.empty
-    else if (nativeDir.isDirectory)
-      // one partition per part file whose seq stats overlap the batch range
-      nativeFiles.flatMap { p =>
-        statsBounds(p, "seq", 0L) match {
-          case Some((mn, mx)) if mx >= lo && mn <= hi =>
-            Some(StreamBatch(p, lo, hi, native = true): InputPartition)
-          case Some(_) => None
-          case None => Some(StreamBatch(p, lo, hi, native = true): InputPartition)
-        }
-      }.toArray
-    else Array(StreamBatch(file, lo, hi))
+    else {
+      if (lastPlan._1 != lo || lastPlan._2 != hi) {
+        val window = scan.seqWindow(lo, hi)
+        val rows = window.createReaderFactory()
+        lastPlan = (lo, hi, window.planInputPartitions()
+          .map(p => StreamBatch(p, rows): InputPartition))
+      }
+      lastPlan._3
+    }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new StreamReaderFactory(stream)
-
-  /** cap the next batch at maxPerBatch messages (AdmissionControl-style) */
-  def nextOffset(current: Long): Long = math.min(maxSeq, current + maxPerBatch)
+  override def createReaderFactory(): PartitionReaderFactory = StreamReaderFactory
 }
 
-final case class SeqOffset(seq: Long) extends Offset {
-  override def json(): String = seq.toString
-}
-
-final case class StreamBatch(file: String, seqLo: Long, seqHi: Long,
-                             native: Boolean = false)
+/** one row group of one micro-batch, with the reader factory of its window */
+final case class StreamBatch(part: InputPartition, window: PartitionReaderFactory)
     extends InputPartition
 
-final class StreamReaderFactory(stream: String) extends PartitionReaderFactory {
+object StreamReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition) = {
     val b = p.asInstanceOf[StreamBatch]
-    new NatsScanReaderFactory(NatsScanSource.envelopeSchema, b.seqLo, b.seqHi,
-      Long.MinValue, Long.MaxValue, Nil, stream)
-      .createReader(NatsScanPartition(b.file, 0L, Long.MaxValue, b.native))
+    b.window.createReader(b.part)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.Offset
 
 import graft.sources.{NatsTransportPartition, NatsTransportReaderFactory, NatsScanSource}
 import graft.transport.Transport
@@ -20,30 +20,22 @@ import graft.transport.Transport
   * still advance past them).
   */
 final class NatsTransportMicroBatchStream(url: String, stream: String,
-                                          maxPerBatch: Long, sliceWidth: Long,
+                                          protected val maxPerBatch: Long,
+                                          sliceWidth: Long,
                                           connectTimeoutMs: Long,
                                           auth: graft.transport.TransportAuth =
                                             graft.transport.TransportAuth.anonymous,
                                           fetchMode: String = "fetch",
                                           durable: Option[String] = None,
                                           subjectFilter: Option[String] = None)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends SeqOffsetStream {
 
   /** LastSeq polled from the server — one streamInfo RPC per trigger, on
     * the POOLED driver connection (a live tail triggering every 300 ms must
     * not pay a dial per trigger). */
-  private def lastSeq: Long =
+  protected def lastSeq: Long =
     graft.transport.TransportPool.get(url, connectTimeoutMs, auth)
       .streamInfo(stream).lastSeq
-
-  /** Trigger.AvailableNow contract: drain up to the offset AVAILABLE NOW
-    * and terminate — pinned at prepare time, so publishes racing the drain
-    * land in the next run instead of extending this one indefinitely on a
-    * hot stream. Other triggers (prepare never called) track the live
-    * head. */
-  @volatile private var availableNowCap: Long = -1L
-  private def head: Long =
-    if (availableNowCap >= 0L) availableNowCap else lastSeq
 
   /** DURABLE mode (`option("durable", name)` — the GUIDE.md "consumer
     * groups / ack-based distribution" roadmap): the server's cumulative
@@ -63,27 +55,6 @@ final class NatsTransportMicroBatchStream(url: String, stream: String,
         .ackFloor(stream, d))
     case None => SeqOffset(0L)
   }
-
-  override def latestOffset(): Offset = SeqOffset(head)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    // saturating add: a huge user-supplied cap must not wrap below the
-    // committed offset (an AvailableNow query would then spin forever)
-    val s = start.asInstanceOf[SeqOffset].seq
-    val capped = if (maxPerBatch > Long.MaxValue - s) Long.MaxValue
-                 else s + maxPerBatch
-    SeqOffset(math.min(head, capped))
-  }
-
-  override def reportLatestOffset(): Offset = SeqOffset(head)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = lastSeq
-
-  override def deserializeOffset(json: String): Offset =
-    SeqOffset(json.trim.toLong)
 
   override def commit(end: Offset): Unit =
     durable.foreach { d =>

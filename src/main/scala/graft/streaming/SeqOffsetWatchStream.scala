@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.connector.read.InputPartition
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.Offset
 
 import graft.transport.{NatsStreamNotFoundException, TransportAuth, TransportPool}
 
@@ -13,10 +13,8 @@ import graft.transport.{NatsStreamNotFoundException, TransportAuth, TransportPoo
   *   - `durable` ack-floor seeding/committing (cross-job handoff, the
   *     message stream's contract);
   *   - `watch_updates_only` starting at the current head;
-  *   - saturating admission control (`max_msgs_per_batch` in stream-seq
-  *     units — a huge cap must not wrap below the committed offset);
-  *   - the strict Trigger.AvailableNow contract: the head is PINNED at
-  *     prepare time, so writes racing a drain land in the next run;
+  *   - [[SeqOffsetStream]]'s admission control (`max_msgs_per_batch` in
+  *     stream-seq units) and pinned Trigger.AvailableNow head;
   *   - ceil-split of each batch's seq range into ≤ `shards` slice
   *     partitions (replay parallelism; wire volume is set by the
   *     subclasses' server-side subject filters, not by slicing).
@@ -25,43 +23,24 @@ import graft.transport.{NatsStreamNotFoundException, TransportAuth, TransportPoo
   * reader factory. */
 abstract class SeqOffsetWatchStream(url: String, protected val stream: String,
                                     shards: Int, updatesOnly: Boolean,
-                                    maxPerBatch: Long, connectTimeoutMs: Long,
+                                    protected val maxPerBatch: Long,
+                                    connectTimeoutMs: Long,
                                     auth: TransportAuth,
                                     durable: Option[String])
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends SeqOffsetStream {
 
   /** one slice of one batch */
   protected def mkPartition(lo: Long, hi: Long): InputPartition
 
-  private def lastSeq: Long =
+  protected def lastSeq: Long =
     try TransportPool.get(url, connectTimeoutMs, auth).streamInfo(stream).lastSeq
     catch { case _: NatsStreamNotFoundException => 0L }
-
-  @volatile private var availableNowCap: Long = -1L
-  private def head: Long =
-    if (availableNowCap >= 0L) availableNowCap else lastSeq
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = lastSeq
 
   override def initialOffset(): Offset = durable match {
     case Some(d) => SeqOffset(
       TransportPool.get(url, connectTimeoutMs, auth).ackFloor(stream, d))
     case None => SeqOffset(if (updatesOnly) lastSeq else 0L)
   }
-
-  override def latestOffset(): Offset = SeqOffset(head)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[SeqOffset].seq
-    val capped = if (maxPerBatch > Long.MaxValue - s) Long.MaxValue
-                 else s + maxPerBatch
-    SeqOffset(math.min(head, capped))
-  }
-
-  override def reportLatestOffset(): Offset = SeqOffset(head)
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-  override def deserializeOffset(json: String): Offset =
-    SeqOffset(json.trim.toLong)
 
   override def commit(end: Offset): Unit =
     durable.foreach { d =>

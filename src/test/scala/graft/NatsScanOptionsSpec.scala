@@ -69,6 +69,17 @@ class NatsScanOptionsSpec extends AnyFunSuite {
       protoExtract = Seq("a.b")).validate()
   }
 
+  test("nats_scan rejects max_msgs_per_batch below 1 at bind") {
+    Seq("0", "-5").foreach { v =>
+      val e = intercept[RuntimeException] {
+        new graft.sources.NatsScanTable(Map("dir" -> "/tmp",
+          "max_msgs_per_batch" -> v))
+      }
+      assert(e.getMessage ==
+        s"nats_scan: max_msgs_per_batch must be >= 1, got $v")
+    }
+  }
+
   test("payload polymorphism: string only under json_extract") {
     assert(NatsScanOptions(jsonExtract = Seq("k")).payloadIsString)
     assert(!NatsScanOptions().payloadIsString)
